@@ -335,7 +335,8 @@ def build_meta_bins(spark: SparkSession, out_dir: str) -> None:
                     ("prows", prows),
                 ):
                     tmp = f"{bdest}/{stem}.{name}.npy.tmp"
-                    np.save(open(tmp, "wb"), arr)
+                    with open(tmp, "wb") as fh:
+                        np.save(fh, arr)
                     os.replace(tmp, f"{bdest}/{stem}.{name}.npy")
                 tmp = f"{bdest}/{stem}.codes.bin.tmp"
                 C8.tofile(tmp)
@@ -459,7 +460,8 @@ def build_tag_bins(spark: SparkSession, out_dir: str) -> None:
                     ("prows", ro.astype(np.int32)),
                 ):
                     tmp = f"{bdest}/{key}.{name}.npy.tmp"
-                    np.save(open(tmp, "wb"), arr)
+                    with open(tmp, "wb") as fh:
+                        np.save(fh, arr)
                     os.replace(tmp, f"{bdest}/{key}.{name}.npy")
                 tmp = f"{bdest}/{key}.codes.bin.tmp"
                 C8.tofile(tmp)
@@ -484,30 +486,54 @@ def build_tag_bins(spark: SparkSession, out_dir: str) -> None:
     os.replace(tmp, f"{dest}/_SUCCESS.json")
 
 
-#: (manifest path, mtime) → (bin_dir, {tag: [(key, n)]}, d) — the tag
-#: sidecar manifest is read per search otherwise (driver-side file open)
+#: (manifest path, mtime) → loaded sidecar manifest — otherwise each
+#: search re-opens and parses it (driver-side file read per batch)
 _TAG_BIN_CACHE: dict = {}
+_META_BIN_CACHE: dict = {}
 
 
-def _tag_bins(out_dir: str):
-    """Loaded tag_bin manifest as the kernels' `bins` tuple, or None
-    when the sidecars are not built (parquet serving path)."""
-    path = f"{out_dir}/tag_bin/_SUCCESS.json"
+def _cached_manifest(cache: dict, path: str, load):
+    """``load(manifest)`` for the JSON manifest at `path`, memoized per
+    (path, st_mtime_ns); None when the manifest does not exist."""
     try:
         token = os.stat(path).st_mtime_ns
     except OSError:
         return None
     key = (path, token)
-    hit = _TAG_BIN_CACHE.get(key)
+    hit = cache.get(key)
     if hit is None:
         with open(path) as fh:
             man = json.load(fh)
-        for stale in [k for k in _TAG_BIN_CACHE if k[0] == path]:
-            del _TAG_BIN_CACHE[stale]
-        _upgrade_tag_bin_bounds(out_dir, man)
-        hit = (f"{out_dir}/tag_bin", man["tags"], int(man["d"]))
-        _TAG_BIN_CACHE[key] = hit
+        for stale in [k for k in cache if k[0] == path]:
+            del cache[stale]
+        hit = load(man)
+        cache[key] = hit
     return hit
+
+
+def _tag_bins(out_dir: str):
+    """Loaded tag_bin manifest as the kernels' `bins` tuple
+    (bin_dir, {tag: [(key, n)]}, d), or None when the sidecars are not
+    built (parquet serving path)."""
+
+    def load(man):
+        _upgrade_tag_bin_bounds(out_dir, man)
+        return (f"{out_dir}/tag_bin", man["tags"], int(man["d"]))
+
+    return _cached_manifest(
+        _TAG_BIN_CACHE, f"{out_dir}/tag_bin/_SUCCESS.json", load
+    )
+
+
+def _meta_bins(out_dir: str):
+    """Loaded meta_bin manifest as `_score_meta_bin`'s `bins` tuple
+    (bin_dir, [(stem, n)], d), or None when the sidecars are not built
+    (parquet sweep)."""
+    return _cached_manifest(
+        _META_BIN_CACHE,
+        f"{out_dir}/meta_bin/_SUCCESS.json",
+        lambda man: (f"{out_dir}/meta_bin", man["files"], int(man["d"])),
+    )
 
 
 def _upgrade_tag_bin_bounds(out_dir: str, man: dict) -> None:
@@ -533,7 +559,8 @@ def _upgrade_tag_bin_bounds(out_dir: str, man: dict) -> None:
                 lst = np.load(f"{bin_dir}/{key_}.lst.npy", mmap_mode="r")
                 bounds = np.searchsorted(lst, grid).astype(np.int64)
                 tmp = f"{dst}.tmp"
-                np.save(open(tmp, "wb"), bounds)
+                with open(tmp, "wb") as fh:
+                    np.save(fh, bounds)
                 os.replace(tmp, dst)
             except (OSError, ValueError):
                 # read-only index dir (shared cache / snapshot) or a
@@ -796,14 +823,12 @@ def filtered_search(
             )
             mp = mp[~tagged]  # scan-all queries stay on the sweep
         if len(mp):
-            bin_dir = f"{out_dir}/meta_bin"
-            if os.path.exists(f"{bin_dir}/_SUCCESS.json"):
+            mb = _meta_bins(out_dir)
+            if mb is not None:
                 # memmap serving sidecars present (build_meta_bins):
                 # prebuilt CSR + candidate-row gather — no per-batch
                 # corpus read/decode; bit-identical results
-                parts.append(
-                    _score_meta_bin(spark, bin_dir, mp, k, off, ndoc=ndoc)
-                )
+                parts.append(_score_meta_bin(spark, mb, mp, k, off, ndoc=ndoc))
             else:
                 parts.append(
                     _score_meta(

@@ -1302,7 +1302,7 @@ def _score_meta_gather(
 
 def _score_meta_bin(
     spark: SparkSession,
-    bin_dir: str,
+    bins: tuple,
     qpdf,
     k: int,
     off: np.ndarray,
@@ -1321,20 +1321,16 @@ def _score_meta_bin(
     fault-taxed hosts.  Query grouping (scan/flat/multi, rarer-conjunct
     choice via ndoc), distance assembly (f32 gather-einsum, f64
     qn − 2g + xn), and tie semantics are IDENTICAL to _score_meta —
-    the two paths are hash-pinned against the same oracle."""
-    import json as _json
-
-    with open(f"{bin_dir}/_SUCCESS.json") as fh:
-        man = _json.load(fh)
-    d = int(man["d"])
+    the two paths are hash-pinned against the same oracle.  `bins` is
+    the loaded manifest (bin_dir, [(stem, n)], d) from
+    filteridx._meta_bins."""
+    bin_dir, files, d = bins
     scan_q, flat_q, multi_q, probed, use_f32 = _group_queries(qpdf, ndoc)
     # tasks: (file, row-split) — candidate work splits with the rows, so
     # parallelism is not capped at the file count
-    nfiles = max(1, len(man["files"]))
+    nfiles = max(1, len(files))
     nsp = max(1, -(-2 * spark.sparkContext.defaultParallelism // nfiles))
-    units = [
-        (stem, int(n), sp, nsp) for stem, n in man["files"] for sp in range(nsp)
-    ]
+    units = [(stem, int(n), sp, nsp) for stem, n in files for sp in range(nsp)]
     bc = spark.sparkContext.broadcast(
         (scan_q, flat_q, multi_q, probed, off, use_f32, bin_dir, d)
     )

@@ -5,6 +5,23 @@ join-strategy changes + skew-join splitting), Arrow on (all our Python
 kernels are pandas-UDF based), shuffle partitions sized to cores rather
 than the 200 default, UTC session timezone so results hash-compare against
 the DuckDB oracle (DuckDB timestamps are UTC-naive).
+
+Python workers run under a repo-owned daemon
+(``spark.python.daemon.module`` = ``filter_vectordb_spark.pydaemon``).
+PySpark invalidates the import caches at the start of every Python task,
+and on Python 3.11 that re-reads the central directory of every zip on
+the worker's ``sys.path`` (the spark-core jar, ``pyspark.zip``, py4j):
+0.1-0.2 s of fixed cost per task.  The daemon makes that re-read
+stat-gated, so an unchanged archive costs one ``stat`` per task (see
+``pydaemon.py``); it also raises the workers' OOM score, so memory
+exhaustion kills a worker before the JVM.  Every Python worker imports
+``filter_vectordb_spark``: local workers find it through the package
+directory ``get_spark`` puts on their PYTHONPATH; on a cluster the
+package must be installed on the executors, as the serve kernels
+already require.
+
+The driver heap defaults to a quarter of the host's physical memory,
+capped at 48g; ``SPARK_DRIVER_MEMORY`` overrides it.
 """
 
 from __future__ import annotations
@@ -56,6 +73,29 @@ _MALLOC_ENV = {
 }
 
 
+#: directory holding this package, on the workers' PYTHONPATH (Spark
+#: appends the launch environment's): the worker daemon is
+#: filter_vectordb_spark.pydaemon, so every Python worker imports the
+#: package, also when the driver runs outside the repo and finds it
+#: through its own sys.path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: driver heap ceiling; below it the default is a quarter of the host's
+#: RAM — a heap sized past physical memory is never collected before
+#: the host's OOM killer takes the JVM
+_MAX_DRIVER_HEAP_MB = 48 * 1024
+
+
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else a quarter of physical memory
+    (MemTotal) capped at 48g, as a Spark size string."""
+    explicit = os.environ.get("SPARK_DRIVER_MEMORY")
+    if explicit:
+        return explicit
+    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(total_mb // 4, _MAX_DRIVER_HEAP_MB)}m"
+
+
 def get_spark(app_name: str = "filter_vectordb_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -78,7 +118,7 @@ def get_spark(app_name: str = "filter_vectordb_spark", cpus: int | None = None) 
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
@@ -86,6 +126,8 @@ def get_spark(app_name: str = "filter_vectordb_spark", cpus: int | None = None) 
         # read as long and convert at load (sources/tables.py)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "filter_vectordb_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in {**_BLAS_ENV, **malloc_env}.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
